@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import graft.operators.IterCache
 
 /** Benchmark main: one JSON line with per-query wall seconds at
   * SPARK_GRAFT_SF_DIR (default sf0.1).
@@ -502,8 +503,8 @@ object Bench {
     // its budget at all
     val warmupJ0 = cpuJiffies()
     try {
-      force(Queries.q1PricingSummary(spark, sfDir))
-      force(SparkEntry.queries("sim_topk_bruteforce")(spark, sfDir))
+      IterCache.scope(force(Queries.q1PricingSummary(spark, sfDir)))
+      IterCache.scope(force(SparkEntry.queries("sim_topk_bruteforce")(spark, sfDir)))
     } catch { case _: Throwable => () }
     val warmupStealPct = stealShare(warmupJ0, cpuJiffies())
     // steal-conditioned degrade (r13 lesson): >30% steal during warmup
@@ -591,7 +592,10 @@ object Bench {
       val j0 = cpuJiffies()
       val capS =
         if (capped != null) laneCapS(prevWarm.get(name)) else Double.MaxValue / 2e3
-      val (res, fired) = watched(name, capS)(force(fn(spark, sfDir)))
+      // the lane's cached substrates die with the lane: no later lane
+      // (or later sample of this one) is priced off them
+      val (res, fired) =
+        watched(name, capS)(IterCache.scope(force(fn(spark, sfDir))))
       val st = stealShare(j0, cpuJiffies())
       if (st >= 0) laneSteal(name) = math.max(laneSteal.getOrElse(name, 0.0), st)
       res match {
@@ -757,7 +761,7 @@ object Bench {
         var i = 0
         while (i < 3 && !drillCapped && elapsedS <= budgetS) {
           val (res, fired) = watched(s"adjud-$name", 30.0)(
-            force(benchQueries(name)(spark, sfDir)))
+            IterCache.scope(force(benchQueries(name)(spark, sfDir))))
           res match {
             case Right(sec) => samples += sec
             case Left(e) => if (fired && isCancellation(e)) drillCapped = true

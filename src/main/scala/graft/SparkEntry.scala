@@ -110,18 +110,13 @@ object SparkEntry {
     * here and scale-INDEPENDENT in nature (it is per task, not per
     * dataset — a 100 TB deployment sizes it to executor memory ÷ buffer
     * size, and past it the conservative sort fallback is exactly the
-    * right behavior). Env-overridable so probes can restore the engine
-    * default. Defined once so Bench, Verify, PlanAudit and the tests
-    * price the same execution mode. Output-hash neutral: the only
+    * right behavior). Defined once so Bench, Verify, PlanAudit and the
+    * tests price the same execution mode. Output-hash neutral: the only
     * order-sensitive consumers of these aggregates are sort_array /
     * explode / count shaped (audited), and the KLL estimate's
     * insertion-order dependence never reaches an oracle (NOTES #17).
     */
-  val ObjAggFallbackThreshold: String =
-    sys.env.get("SPARK_GRAFT_OBJ_AGG_FALLBACK")
-      .flatMap(s => scala.util.Try(s.trim.toInt).toOption)
-      .filter(_ > 0).map(_.toString)
-      .getOrElse("65536")
+  val ObjAggFallbackThreshold: String = "65536"
 
   /** The SPARK_GRAFT_ONLY / --only subset spec — comma-separated names,
     * trailing '*' = prefix match — defined ONCE so the same spec can

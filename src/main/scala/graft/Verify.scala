@@ -1,6 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import graft.operators.IterCache
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -25,10 +26,12 @@ object Verify {
     // local iteration dump one new query in seconds instead of the full
     // registry; the driver sets no filter and always gets the full dump
     val onlyFilter = SparkEntry.onlyFilter(sys.env.get("SPARK_GRAFT_ONLY"))
+    val failed = scala.collection.mutable.ListBuffer.empty[String]
     SparkEntry.queries.filter(kv => onlyFilter(kv._1)).foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+      try IterCache.scope(fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/$name"))
       catch { case e: Throwable =>
+        failed += name
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
         // remove any stale output from a previous run: a regressed query
         // must surface as missing, not silently pass on old results
@@ -65,6 +68,8 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v.replace("__DUMP__", dumpRoot))}" }
       .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    if (failed.nonEmpty)
+      System.err.println(s"[verify] failed: ${failed.sorted.mkString(",")}")
     spark.stop()
   }
 }

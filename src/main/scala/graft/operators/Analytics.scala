@@ -86,33 +86,27 @@ object Analytics {
     // flat: the cache IS the truncation for this build-once frame (the
     // per-round rank/label frames still localCheckpoint — those genuinely
     // accumulate lineage).
-    // IterCache bounds how many of these stay resident (LRU unpersist —
-    // always safe: an evicted cache recomputes from its logical plan)
-    IterCache.getOrBuild(s"copurchase:$dir") {
-      val n = spark.sessionState.conf.numShufflePartitions
-      // both directions in one pass (explode, not self-union — the
-      // union form executes the distinct branch twice)
-      und.select(explode(array(
-          struct(col("u"), col("v")),
-          struct(col("v").as("u"), col("u").as("v")))).as("e"))
-        .select(col("e.u").as("u"), col("e.v").as("v"))
-        .repartition(n, col("u"))
-        .dropDuplicates("u", "v")
-        .sortWithinPartitions(col("u"))
-        .persist()
-    }
+    // IterCache ties the cache to the lane that built it (unpersisted
+    // when the lane's scope exits)
+    val n = spark.sessionState.conf.numShufflePartitions
+    // both directions in one pass (explode, not self-union — the
+    // union form executes the distinct branch twice)
+    IterCache.persist(und.select(explode(array(
+        struct(col("u"), col("v")),
+        struct(col("v").as("u"), col("u").as("v")))).as("e"))
+      .select(col("e.u").as("u"), col("e.v").as("v"))
+      .repartition(n, col("u"))
+      .dropDuplicates("u", "v")
+      .sortWithinPartitions(col("u")))
   }
 
   /** Degree frame beside [[coPurchaseEdges]] — cached (not
     * checkpointed) so it inherits the edges' hash(u) partitioning and
-    * the per-round deg join side needs no exchange; registry-bounded
-    * like the edges.
+    * the per-round deg join side needs no exchange; lane-scoped like
+    * the edges.
     */
-  private def coPurchaseDeg(spark: SparkSession, dir: String,
-      edges: DataFrame): DataFrame =
-    IterCache.getOrBuild(s"copurchase-deg:$dir") {
-      edges.groupBy(col("u")).agg(count(lit(1)).as("deg")).persist()
-    }
+  private def coPurchaseDeg(edges: DataFrame): DataFrame =
+    IterCache.persist(edges.groupBy(col("u")).agg(count(lit(1)).as("deg")))
 
   /** The co-purchase edge set as oracle CTEs (`und`, `edges`) — the SQL
     * twin of [[coPurchaseEdges]], shared by both oracles.
@@ -126,7 +120,7 @@ object Analytics {
 
   def pagerank(spark: SparkSession, dir: String): DataFrame = {
     val edges = coPurchaseEdges(spark, dir)
-    val deg = coPurchaseDeg(spark, dir, edges)
+    val deg = coPurchaseDeg(edges)
     val n = deg.count() // bounded driver state: one long (node count)
 
     var rank = deg.select(col("u").as("node"), lit(1.0 / n).as("rank"))
@@ -163,7 +157,7 @@ object Analytics {
   private[graft] def pagerankConverged(spark: SparkSession, dir: String,
       eps: Double = 1e-9, maxIters: Int = 20): (DataFrame, Int) = {
     val edges = coPurchaseEdges(spark, dir)
-    val deg = coPurchaseDeg(spark, dir, edges)
+    val deg = coPurchaseDeg(edges)
     val n = deg.count()
     var rank = deg.select(col("u").as("node"), lit(1.0 / n).as("rank"))
       .localCheckpoint()

@@ -27,9 +27,9 @@ object Analytics5 {
     * volume this frame is ~120M rows and materializing it cost
     * 83–108 s per query invocation — while components' thresholded
     * graph kept just 200 of those rows. Each consumer instead caches
-    * the (much smaller, partition-pinned) frame IT iterates on, inside
-    * IterCache, so warm invocations skip this build entirely and the
-    * full-volume intermediate is never stored anywhere.
+    * the (much smaller, partition-pinned) frame IT iterates on, for
+    * the length of its own lane (IterCache), so the full-volume
+    * intermediate is never stored anywhere.
     */
   private def weightedEdges(spark: SparkSession, dir: String): DataFrame = {
     val li = Tables.lineitem(spark, dir)
@@ -112,18 +112,15 @@ object Analytics5 {
     // InMemoryTableScan keeps |E| out of every round's exchange and
     // sort (see Analytics.coPurchaseEdges for why cache, not
     // localCheckpoint, is the partitioning-preserving truncation)
-    val ew = IterCache.getOrBuild(s"sssp-ew:$dir") {
-      val np = spark.sessionState.conf.numShufflePartitions
-      // both directions in ONE pass over the (now-lazy) wed: a
-      // self-union would execute the aggregate branch twice
-      wed.select(explode(array(
-          struct(col("u"), col("v"), w.as("w")),
-          struct(col("v").as("u"), col("u").as("v"), w.as("w")))).as("e"))
-        .select(col("e.u").as("u"), col("e.v").as("v"), col("e.w").as("w"))
-        .repartition(np, col("u"))
-        .sortWithinPartitions(col("u"))
-        .persist()
-    }
+    val np = spark.sessionState.conf.numShufflePartitions
+    // both directions in ONE pass over the (now-lazy) wed: a
+    // self-union would execute the aggregate branch twice
+    val ew = IterCache.persist(wed.select(explode(array(
+        struct(col("u"), col("v"), w.as("w")),
+        struct(col("v").as("u"), col("u").as("v"), w.as("w")))).as("e"))
+      .select(col("e.u").as("u"), col("e.v").as("v"), col("e.w").as("w"))
+      .repartition(np, col("u"))
+      .sortWithinPartitions(col("u")))
     // checkpoint the seed too: it derives from ew, and the relaxation
     // join would otherwise be an ambiguous self-join
     var dist = ew.agg(min(col("u")).as("node"))
@@ -178,16 +175,13 @@ object Analytics5 {
     val wed = weightedEdges(spark, dir).filter(col("n") >= CompThreshold)
     // same partition-preserving CACHE discipline as shortestPath's ew:
     // the label-propagation join re-keys on u every round
-    val e = IterCache.getOrBuild(s"components-e:$dir") {
-      val np = spark.sessionState.conf.numShufflePartitions
-      wed.select(explode(array(
-          struct(col("u"), col("v")),
-          struct(col("v").as("u"), col("u").as("v")))).as("e"))
-        .select(col("e.u").as("u"), col("e.v").as("v"))
-        .repartition(np, col("u"))
-        .sortWithinPartitions(col("u"))
-        .persist()
-    }
+    val np = spark.sessionState.conf.numShufflePartitions
+    val e = IterCache.persist(wed.select(explode(array(
+        struct(col("u"), col("v")),
+        struct(col("v").as("u"), col("u").as("v")))).as("e"))
+      .select(col("e.u").as("u"), col("e.v").as("v"))
+      .repartition(np, col("u"))
+      .sortWithinPartitions(col("u")))
     var labels = e.select(col("u").as("node")).distinct()
       .withColumn("label", col("node"))
       .localCheckpoint()

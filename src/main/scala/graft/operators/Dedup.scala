@@ -152,24 +152,16 @@ object Dedup {
   private[graft] def verifiedPairs(docs: DataFrame): DataFrame =
     verifiedPairsUncached(docs)
 
-  /** [[verifiedPairs]] keyed on the corpus dir and held in IterCache —
-    * r16, the round-11 graph-edge-frame discipline: FIVE lanes
+  /** [[verifiedPairs]] over the corpus, cached for the length of the
+    * calling lane (IterCache). The pair stream is deterministic (FNV
+    * hashing, documented) and output-sized. Every lane that consumes it
     * (minhash_lsh, clusters, survivors, tier_recall, and the
-    * leakage-split/preference-pairs compositions over clusters) each
-    * rebuilt the identical shingle → minhash → band → capped-pair →
-    * exact-verify pipeline from the scan up (~1.1 s apiece at sf0.1).
-    * The pair stream is deterministic (FNV hashing, documented), tiny
-    * (output-sized), and session-scoped: the first lane to touch it
-    * pays the build, warm lanes amortize it, eviction is always safe
-    * (recompute from the logical plan), and nothing persists across
-    * JVMs — every bench/oracle invocation still computes it from the
-    * parquet inputs.
+    * leakage-split/preference-pairs compositions over clusters) builds
+    * its own copy from the parquet inputs.
     */
   private[graft] def verifiedPairsCached(spark: SparkSession,
       dir: String): DataFrame =
-    IterCache.getOrBuild(s"lsh-vp:$dir") {
-      verifiedPairsUncached(Tables.documents(spark, dir)).persist()
-    }
+    IterCache.persist(verifiedPairsUncached(Tables.documents(spark, dir)))
 
   private def verifiedPairsUncached(docs: DataFrame): DataFrame = {
     // materialize the signature stream once: it feeds BOTH sides of the
@@ -333,18 +325,15 @@ object Dedup {
   def dedupClusters(spark: SparkSession, dir: String): DataFrame =
     clustersCached(spark, dir).orderBy(col("doc_id"))
 
-  /** [[clustersOf]] over [[verifiedPairsCached]], itself IterCache-held
-    * (r16): the cluster labels are consumed by FOUR lanes (clusters,
-    * survivors, leakage_split, preference_pairs) and the propagation
-    * loop's per-round actions are pure rebuild cost for every lane
-    * after the first. Deterministic (min-label fixpoint over the
-    * deterministic pair stream), output-sized, session-scoped.
+  /** [[clustersOf]] over [[verifiedPairsCached]], cached for the
+    * length of the calling lane (IterCache). Deterministic (min-label
+    * fixpoint over the deterministic pair stream) and output-sized;
+    * each of its four consumer lanes (clusters, survivors,
+    * leakage_split, preference_pairs) runs the propagation loop itself.
     */
   private[graft] def clustersCached(spark: SparkSession,
       dir: String): DataFrame =
-    IterCache.getOrBuild(s"lsh-clusters:$dir") {
-      clustersOf(verifiedPairsCached(spark, dir)).persist()
-    }
+    IterCache.persist(clustersOf(verifiedPairsCached(spark, dir)))
 
   private def clustersOf(pairs0: DataFrame): DataFrame = {
     val pairs = pairs0.select(col("id_a"), col("id_b"))
@@ -404,9 +393,8 @@ object Dedup {
   def dedupSurvivors(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
     val exactKeep = dedupExact(spark, dir).select(col("keep_id").as("doc_id"))
-    // share the substrate: the IterCache-held cluster labels (one LSH
-    // pipeline + one propagation loop per session, not per lane), so
-    // survivors costs two broadcastable joins on top
+    // the cluster labels of dedup_clusters, built and cached for this
+    // lane; survivors costs two broadcastable joins on top
     val nearDupLosers = clustersCached(spark, dir)
       .filter(col("doc_id") =!= col("cluster_rep"))
       .select(col("doc_id"))
@@ -513,17 +501,15 @@ object Dedup {
     (shRows, cand)
   }
 
-  /** [[dedupPrefixJaccard]] held in IterCache (r16): the exact pair
-    * stream is the ground truth of dedup_tier_recall AND the
-    * dedup_prefix_jaccard output itself — two lanes, one deterministic
-    * output-sized frame; same session-scoped discipline as
+  /** [[dedupPrefixJaccard]] cached for the length of the calling lane
+    * (IterCache): the exact pair stream is the ground truth of
+    * dedup_tier_recall AND the dedup_prefix_jaccard output itself; each
+    * of the two lanes builds it once. Same lane-scoped discipline as
     * [[verifiedPairsCached]].
     */
   private[graft] def prefixPairsCached(spark: SparkSession,
       dir: String): DataFrame =
-    IterCache.getOrBuild(s"prefix-pairs:$dir") {
-      dedupPrefixJaccard(spark, dir).persist()
-    }
+    IterCache.persist(dedupPrefixJaccard(spark, dir))
 
   def dedupPrefixJaccard(spark: SparkSession, dir: String): DataFrame = {
     val (shRows, cand) = prefixJaccardStage(spark, dir)

@@ -90,23 +90,17 @@ object Pipeline5 {
     (syms, merges.result())
   }
 
-  /** The trained merge table as a SESSION-SCOPED substrate (r16, the
-    * dedup-family IterCache discipline): it is the tokenizer MODEL —
-    * the one output-sized deterministic artifact both registered lanes
-    * consume. Before this cache each lane re-ran the full
-    * [[BpeMerges]]-round argmax loop the other had just run. ONLY the
-    * merge table is cached (a first cut also cached the merged dict,
-    * which made the first toucher pay a second materialization for a
-    * frame [[pipelineBpeApply]] can derive from the merges in one
-    * narrow pass — see its scaladoc). Evict-safe: rebuilds from the
-    * logical inputs. Nothing persists across JVMs.
+  /** The trained merge table, cached for the length of the calling
+    * lane (IterCache): it is the tokenizer MODEL — the one output-sized
+    * deterministic artifact both registered lanes consume, and each of
+    * them runs the full [[BpeMerges]]-round argmax loop itself. ONLY the
+    * merge table is cached: [[pipelineBpeApply]] derives the merged
+    * dict from the merges in one narrow pass (see its scaladoc).
     */
   private def bpeMergesCached(spark: SparkSession, dir: String,
       dict: () => DataFrame): DataFrame = {
     import spark.implicits._
-    IterCache.getOrBuild(s"bpe-merges:$dir") {
-      train(spark, dir, dict())._2.toDF("it", "pair", "cnt").persist()
-    }
+    IterCache.persist(train(spark, dir, dict())._2.toDF("it", "pair", "cnt"))
   }
 
   /** Train [[BpeMerges]] BPE merges over the document corpus; result is

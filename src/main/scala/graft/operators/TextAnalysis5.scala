@@ -91,19 +91,16 @@ object TextAnalysis5 {
           (col("c_a") + col("v")).cast("double")) * 1e6 + 0.5).cast("long"))
   }
 
-  /** The model as a SESSION-SCOPED substrate (r16, the dedup-family
-    * IterCache discipline): `text_lm_train` IS this frame and
-    * `text_lm_perplexity` broadcast-joins it — before this cache the
-    * scoring lane re-ran the full training chain (three corpus
-    * aggregates) that the training lane had just built. The frame is
-    * output-sized (one row per observed bigram ≪ corpus — it is
-    * literally the lane's dumped artifact, the "verified model shipped
-    * to the scoring fleet" of the scaladoc above), deterministic, and
-    * evict-safe (recomputes from the logical plan). Nothing persists
-    * across JVMs.
+  /** The model, cached for the length of the calling lane (IterCache):
+    * `text_lm_train` IS this frame and `text_lm_perplexity`
+    * broadcast-joins it, each lane running the full training chain
+    * (three corpus aggregates) itself. The frame is output-sized (one
+    * row per observed bigram ≪ corpus — it is literally the lane's
+    * dumped artifact, the "verified model shipped to the scoring fleet"
+    * of the scaladoc above) and deterministic.
     */
   private def modelCached(spark: SparkSession, dir: String): DataFrame =
-    IterCache.getOrBuild(s"lm-model:$dir") { model(spark, dir).persist() }
+    IterCache.persist(model(spark, dir))
 
   /** Registered training query: the model table itself. */
   def textLmTrain(spark: SparkSession, dir: String): DataFrame =

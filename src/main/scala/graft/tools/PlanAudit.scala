@@ -3,6 +3,7 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 
+import graft.operators.IterCache
 import graft.streaming.StreamingQueries
 
 /** Prints the EXECUTED-plan audit for EVERY registered query: scan
@@ -528,24 +529,28 @@ object PlanAudit {
       // runToMemory, and auditing a STALE plan from the previous
       // streaming query would silently misattribute its shape
       if (streaming) StreamingQueries.lastMicroBatchPlan = ""
-      val df = graft.SparkEntry.queries(name)(spark, dir)
-      val (plan, finalTag) = if (streaming) {
-        // the query already ran (drained to the memory sink); audit the
-        // captured micro-batch plan, not the sink table's local scan
-        if (StreamingQueries.lastMicroBatchPlan.isEmpty)
-          failures += s"$name:no-microbatch-plan-captured"
-        (StreamingQueries.lastMicroBatchPlan, "stream")
-      } else {
-        val qe = df.queryExecution
-        // execute through THIS QueryExecution so AQE finalizes in place;
-        // df.write would build a separate QueryExecution and leave this
-        // one at its initial plan
-        qe.executedPlan.executeCollect()
-        val isFinal = qe.executedPlan match {
-          case a: AdaptiveSparkPlanExec => a.isFinalPlan
-          case _ => true // non-adaptive plans are what they are
+      // scoped: a later lane's plan must not show this lane's cached
+      // substrate as an InMemoryRelation
+      val (plan, finalTag) = IterCache.scope {
+        val df = graft.SparkEntry.queries(name)(spark, dir)
+        if (streaming) {
+          // the query already ran (drained to the memory sink); audit the
+          // captured micro-batch plan, not the sink table's local scan
+          if (StreamingQueries.lastMicroBatchPlan.isEmpty)
+            failures += s"$name:no-microbatch-plan-captured"
+          (StreamingQueries.lastMicroBatchPlan, "stream")
+        } else {
+          val qe = df.queryExecution
+          // execute through THIS QueryExecution so AQE finalizes in place;
+          // df.write would build a separate QueryExecution and leave this
+          // one at its initial plan
+          qe.executedPlan.executeCollect()
+          val isFinal = qe.executedPlan match {
+            case a: AdaptiveSparkPlanExec => a.isFinalPlan
+            case _ => true // non-adaptive plans are what they are
+          }
+          (qe.executedPlan.toString.split("== Initial Plan ==")(0), isFinal.toString)
         }
-        (qe.executedPlan.toString.split("== Initial Plan ==")(0), isFinal.toString)
       }
       // A ReusedExchange node prints its reused child INLINE
       // ("ReusedExchange [...], Exchange hashpartitioning(...)"), so

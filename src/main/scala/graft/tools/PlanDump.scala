@@ -3,6 +3,7 @@ package graft.tools
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.SparkSession
+import graft.operators.IterCache
 
 /** Dump `.explain("formatted")` for named queries to files — the
   * before/after plan evidence the optimization rounds commit under
@@ -34,9 +35,10 @@ object PlanDump {
     spark.sparkContext.setLogLevel("ERROR")
     Files.createDirectories(Paths.get(outDir))
     names.split(",").map(_.trim).filter(_.nonEmpty).foreach { name =>
-      val df = graft.SparkEntry.queries(name)(spark, dir)
-      val txt = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
+      // scoped: a later lane's plan must not show this lane's cached
+      // substrate as an InMemoryRelation
+      val txt = IterCache.scope(graft.SparkEntry.queries(name)(spark, dir)
+        .queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode))
       Files.write(Paths.get(s"$outDir/${name}_$suffix.txt"),
         txt.getBytes("UTF-8"))
       System.err.println(s"[plandump] wrote $outDir/${name}_$suffix.txt")

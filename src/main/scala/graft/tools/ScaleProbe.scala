@@ -3,6 +3,7 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.SparkEntry
+import graft.operators.IterCache
 
 /** One-off scale validation: replicate the sf0.1 tables N× (default 10)
   * and time the repo's five most expensive plans at both volumes, so the
@@ -235,11 +236,13 @@ object ScaleProbe {
           spark.conf.set("spark.sql.shuffle.partitions", baseParts)
       }
     }
+    // every run opens its own cache scope, so a warm sample pays for
+    // the substrate its lane builds
     def timeBody(run: () => Unit): Double = {
-      run() // untimed cold: codegen + fixture builds
+      IterCache.scope(run()) // untimed cold: codegen + fixture builds
       median((1 to passes).map { _ =>
         val t0 = System.nanoTime()
-        run()
+        IterCache.scope(run())
         (System.nanoTime() - t0) / 1e9
       })
     }
@@ -277,7 +280,8 @@ object ScaleProbe {
       Seq(skew1 -> "1x", skewN -> s"${factor}x").foreach { case (d, tag) =>
         val (_, cand) = graft.operators.Dedup.prefixJaccardStage(spark, d)
         val nCand = cand.count()
-        val nOut = SparkEntry.queries("dedup_prefix_jaccard")(spark, d).count()
+        val nOut = IterCache.scope(
+          SparkEntry.queries("dedup_prefix_jaccard")(spark, d).count())
         println(f"""{"q":"dedup_prefix_jaccard","skew":true,"vol":"$tag",""" +
           f""""candidates":$nCand,"verified":$nOut,""" +
           f""""waste":${nCand.toDouble / math.max(1L, nOut)}%.3f}""")
@@ -361,7 +365,7 @@ object ScaleProbe {
         Seq(baseDir -> "1x", outDir -> s"${factor}x").foreach { case (d, tag) =>
           graft.streaming.StreamingQueries.captureProgress = true
           try withVolumeConf(d) {
-            force(SparkEntry.queries(q)(spark, d))
+            IterCache.scope(force(SparkEntry.queries(q)(spark, d)))
             val ps = graft.streaming.StreamingQueries.lastRunProgress
             if (ps.nonEmpty) {
               val durs = ps.map(_.durationMs.toDouble)

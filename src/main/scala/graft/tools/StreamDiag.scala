@@ -1,6 +1,7 @@
 package graft.tools
 
 import org.apache.spark.sql.SparkSession
+import graft.operators.IterCache
 
 /** Streaming-lane attribution instrument (round 13). Runs one
   * registered streaming lane SPARK_GRAFT_DIAG_RUNS times in a single
@@ -57,7 +58,7 @@ object StreamDiag {
         graft.streaming.StreamingQueries.captureProgressJson = true
         val b = graft.Bench.jvmCosts()
         val t0 = System.nanoTime()
-        try force(graft.SparkEntry.queries(q)(spark, sfDir))
+        try IterCache.scope(force(graft.SparkEntry.queries(q)(spark, sfDir)))
         finally graft.streaming.StreamingQueries.captureProgressJson = false
         val sec = (System.nanoTime() - t0) / 1e9
         val a = graft.Bench.jvmCosts()

@@ -111,13 +111,13 @@ object CodecPropertySpec extends Properties("codecs") {
     Gen.listOfN(5, Gen.zip(Gen.choose(0, 4000), Gen.choose(0L, Long.MaxValue / 2)))
       .flatMap(l => Gen.choose(1, 5).map(n => l.take(n)))
 
-  private def entryBytes(n: Int, seed: Long): Array[Byte] =
+  private def entryPayload(n: Int, seed: Long): Array[Byte] =
     Array.tabulate(n)(i =>
       (if ((i / 29) % 2 == 0) (i % 17) else ((i * 31 + seed) % 256)).toByte)
 
   property("multi-member gzip round-trips arbitrary member sets") =
     forAll(archiveEntries) { specs =>
-      val recs = specs.map { case (n, seed) => entryBytes(n, seed) }
+      val recs = specs.map { case (n, seed) => entryPayload(n, seed) }
       val gz = graft.functions.WarcCodec.gzipWrap(recs)
       graft.functions.WarcCodec.gzipMembers(gz) match {
         case Right(ms) => ms.length == recs.length &&
@@ -129,7 +129,7 @@ object CodecPropertySpec extends Properties("codecs") {
   property("tar round-trips arbitrary entry sets across padding edges") =
     forAll(archiveEntries) { specs =>
       val entries = specs.zipWithIndex.map { case ((n, seed), i) =>
-        s"e$i-$n.bin" -> entryBytes(n, seed)
+        s"e$i-$n.bin" -> entryPayload(n, seed)
       }
       val tar = graft.functions.TarCodec.tarWrap(entries)
       graft.functions.TarCodec.tarEntries(tar) match {
@@ -144,7 +144,7 @@ object CodecPropertySpec extends Properties("codecs") {
   property("zip central directory + random access round-trip; JDK agrees") =
     forAll(archiveEntries) { specs =>
       val entries = specs.zipWithIndex.map { case ((n, seed), i) =>
-        s"e$i.bin" -> entryBytes(n, seed)
+        s"e$i.bin" -> entryPayload(n, seed)
       }
       val zip = graft.functions.ZipCodec.zipWrap(entries)
       val ours = graft.functions.ZipCodec.centralDirectory(zip) match {

@@ -5,161 +5,61 @@ import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.IterCache
 
-/** JVM-level contract of the bounded edge-cache registry: hit identity,
-  * BYTE-budget eviction (the round-12 durable form of the old count
-  * cap), cross-volume flush, recency refresh, stale-conf rebuild, and
-  * the correctness-safety property eviction relies on (an unpersisted
-  * frame still computes).
+/** Contract of the lane-scoped substrate cache: a frame persisted inside
+  * a scope is cached and materialized for the scope's length and
+  * unpersisted when it exits (also on a throw), an unpersisted frame
+  * still computes, and a lane run under a scope leaves nothing in the
+  * session's cache.
   */
 class IterCacheSpec extends AnyFunSuite with SparkTestBase {
 
+  // distinct sizes per test: Spark's cache is PLAN-keyed, so identical
+  // frames would share one storage entry and alias the assertions
   private def frame(n: Int) =
-    spark.range(n).select(col("id").as("u"), (col("id") * 2).as("v")).persist()
+    spark.range(n).select(col("id").as("u"), (col("id") * 2).as("v"))
 
-  test("getOrBuild: second call is a hit — same DataFrame, no rebuild") {
-    var builds = 0
-    def build() = { builds += 1; frame(10) }
-    val key = s"spec-hit-${System.nanoTime()}"
-    val a = IterCache.getOrBuild(key)(build())
-    val b = IterCache.getOrBuild(key)(build())
-    assert(builds === 1)
-    assert(a eq b)
-    assert(a.storageLevel !== StorageLevel.NONE)
-  }
-
-  test("entries record their measured in-memory size") {
-    val key = s"spec-bytes-${System.nanoTime()}"
-    IterCache.getOrBuild(key)(frame(1000))
-    val bytes = IterCache.entryBytes(key)
-    assert(bytes.nonEmpty && bytes.get > 0,
-      s"materialized entry must report a positive size, got $bytes")
-  }
-
-  test("byte-budget eviction: oldest evicted when the budget fills; results stay correct") {
-    val tag = System.nanoTime()
-    // learn the size of one fixture frame, then set a budget that holds
-    // roughly two of them — the third insert must evict the first
-    val probe = IterCache.getOrBuild(s"spec-size-$tag")(frame(500))
-    val s = IterCache.entryBytes(s"spec-size-$tag").get
-    probe.unpersist(true)
-    IterCache.maxBytesOverride = Some(s * 2 + s / 2)
-    try {
-      val f0 = IterCache.getOrBuild(s"spec-bb-$tag-0")(frame(501))
-      val f1 = IterCache.getOrBuild(s"spec-bb-$tag-1")(frame(502))
-      val f2 = IterCache.getOrBuild(s"spec-bb-$tag-2")(frame(503))
-      assert(f0.storageLevel === StorageLevel.NONE,
-        "first entry must be evicted once the byte budget fills")
-      assert(f2.storageLevel !== StorageLevel.NONE)
-      // an evicted frame still computes (the safety property the tight
-      // budget relies on: cache eviction can never break a consumer)
-      assert(f0.count() === 501L)
-      // a re-request after eviction rebuilds rather than returning a
-      // stale registry entry
-      var rebuilt = false
-      val again = IterCache.getOrBuild(s"spec-bb-$tag-0") {
-        rebuilt = true; frame(501)
-      }
-      assert(rebuilt)
-      assert(again.count() === 501L)
-      // the budget is honored as an invariant over recorded sizes
-      val live = Seq(s"spec-bb-$tag-0", s"spec-bb-$tag-1", s"spec-bb-$tag-2")
-        .flatMap(IterCache.entryBytes)
-      assert(live.sum <= s * 2 + s / 2, s"live bytes ${live.sum} over budget")
-      assert(f1 ne null) // silence unused warning
-    } finally IterCache.maxBytesOverride = None
-  }
-
-  test("an over-budget entry is admitted alone rather than rejected") {
-    val tag = System.nanoTime()
-    IterCache.maxBytesOverride = Some(1L) // nothing fits
-    try {
-      val f = IterCache.getOrBuild(s"spec-huge-$tag")(frame(600))
-      assert(f.storageLevel !== StorageLevel.NONE,
-        "the entry being built must be admitted even when over budget")
-      assert(f.count() === 600L)
-    } finally IterCache.maxBytesOverride = None
-  }
-
-  test("cross-volume flush: building for one dir evicts other dirs' entries") {
-    val tag = System.nanoTime()
-    // distinct sizes: Spark's cache is PLAN-keyed, so identical frames
-    // would share one storage entry and alias the assertions
-    val a = IterCache.getOrBuild(s"spec-xv-$tag:/vol/A")(frame(40))
-    val a2 = IterCache.getOrBuild(s"spec-xv2-$tag:/vol/A")(frame(41))
-    assert(a.storageLevel !== StorageLevel.NONE)
-    // a build for a DIFFERENT volume must flush both /vol/A entries
-    // (their sizes are incomparable with the new volume's)
-    val b = IterCache.getOrBuild(s"spec-xv-$tag:/vol/B")(frame(42))
-    assert(a.storageLevel === StorageLevel.NONE)
-    assert(a2.storageLevel === StorageLevel.NONE)
-    assert(b.storageLevel !== StorageLevel.NONE)
-    // same volume does NOT flush
-    val b2 = IterCache.getOrBuild(s"spec-xv2-$tag:/vol/B")(frame(43))
-    assert(b.storageLevel !== StorageLevel.NONE)
-    assert(b2.storageLevel !== StorageLevel.NONE)
-  }
-
-  test("access refreshes recency: a re-read entry survives byte eviction") {
-    val tag = System.nanoTime()
-    val probe = IterCache.getOrBuild(s"spec-size2-$tag")(frame(700))
-    val s = IterCache.entryBytes(s"spec-size2-$tag").get
-    probe.unpersist(true)
-    // budget for ~3 entries (headroom rule clears to budget/2 ≈ 1.6
-    // entries pre-build, so two survivors + the new build fit)
-    IterCache.maxBytesOverride = Some(s * 3 + s / 2)
-    try {
-      val first = IterCache.getOrBuild(s"spec-ref-$tag-0")(frame(701))
-      IterCache.getOrBuild(s"spec-ref-$tag-1")(frame(702))
-      // touch entry 0 so entry 1 becomes the LRU
-      val hit = IterCache.getOrBuild(s"spec-ref-$tag-0")(fail("must be a hit"))
-      assert(hit eq first)
-      IterCache.getOrBuild(s"spec-ref-$tag-2")(frame(703))
-      assert(first.storageLevel !== StorageLevel.NONE,
-        "recently-read entry must not be the eviction victim")
-    } finally IterCache.maxBytesOverride = None
-  }
-
-  test("concurrent same-key callers rendezvous on ONE build") {
-    val key = s"spec-conc-${System.nanoTime()}"
-    val builds = new java.util.concurrent.atomic.AtomicInteger(0)
-    val startGate = new java.util.concurrent.CountDownLatch(1)
-    val results = new java.util.concurrent.ConcurrentLinkedQueue[AnyRef]()
-    val threads = (0 until 4).map { _ =>
-      new Thread(() => {
-        startGate.await()
-        val df = IterCache.getOrBuild(key) {
-          builds.incrementAndGet()
-          Thread.sleep(100) // widen the in-flight window
-          frame(900)
-        }
-        results.add(df)
-      })
+  test("persist caches a frame inside a scope; the scope's exit unpersists it") {
+    val df = frame(10)
+    assert(df.storageLevel === StorageLevel.NONE)
+    val inside = IterCache.scope {
+      val p = IterCache.persist(df)
+      assert(p eq df)
+      p.storageLevel
     }
-    threads.foreach(_.start())
-    startGate.countDown()
-    threads.foreach(_.join(30000))
-    assert(builds.get === 1, "same-key concurrent callers must share one build")
-    assert(results.size === 4)
-    val distinct = new java.util.IdentityHashMap[AnyRef, Unit]()
-    results.forEach(r => distinct.put(r, ()))
-    assert(distinct.size === 1, "all callers must receive the same frame")
+    assert(inside !== StorageLevel.NONE)
+    assert(df.storageLevel === StorageLevel.NONE)
   }
 
-  test("a hit built under a different shuffle-partitions conf rebuilds") {
-    val key = s"spec-conf-${System.nanoTime()}"
-    val before = spark.conf.get("spark.sql.shuffle.partitions")
-    val a = IterCache.getOrBuild(key)(frame(20))
-    try {
-      spark.conf.set("spark.sql.shuffle.partitions",
-        (before.toInt * 2).toString)
-      var rebuilt = false
-      // a DIFFERENT size: Spark's cache is plan-keyed, so an identical
-      // rebuild plan would re-register the stale frame's storage entry
-      // and alias the unpersist assertion
-      val b = IterCache.getOrBuild(key) { rebuilt = true; frame(21) }
-      assert(rebuilt, "stale-conf entry must rebuild, not hit")
-      assert(b ne a)
-      assert(a.storageLevel === StorageLevel.NONE, "stale entry unpersisted")
-    } finally spark.conf.set("spark.sql.shuffle.partitions", before)
+  test("a scope unpersists its frames when its body throws") {
+    val df = frame(11)
+    intercept[IllegalStateException] {
+      IterCache.scope {
+        IterCache.persist(df)
+        throw new IllegalStateException("lane failed")
+      }
+    }
+    assert(df.storageLevel === StorageLevel.NONE)
+  }
+
+  test("an unpersisted frame still computes") {
+    val df = IterCache.scope(IterCache.persist(frame(501)))
+    assert(df.storageLevel === StorageLevel.NONE)
+    assert(df.count() === 501L)
+    assert(df.agg(sum(col("v"))).head().getLong(0) === 501L * 500L)
+  }
+
+  test("lanes run under a scope leave the session cache empty") {
+    // frames persisted outside any scope stay until the caller clears
+    // them: start from an empty cache
+    spark.catalog.clearCache()
+    Seq("q78_pagerank", "dedup_clusters", "text_lm_perplexity").foreach { q =>
+      IterCache.scope {
+        SparkEntry.queries(q)(spark, sf0001)
+          .write.format("noop").mode("overwrite").save()
+        // each of these lanes caches a substrate while it runs
+        assert(!spark.sharedState.cacheManager.isEmpty, s"$q cached nothing")
+      }
+      assert(spark.sharedState.cacheManager.isEmpty, s"$q left a cached frame")
+    }
   }
 }

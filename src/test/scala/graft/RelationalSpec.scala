@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.Relational
+import graft.operators.{IterCache, Relational}
 
 /** Sanity + semantics checks for the relational surface at sf0.001.
   * (Exact value parity vs DuckDB is enforced by tools/local_verify.py and
@@ -18,13 +18,20 @@ class RelationalSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("every registered query executes and is non-degenerate at sf0.001") {
-    def check(q: QueryDef): Unit = {
-      val df = q.fn(spark, sf0001)
-      val n = df.count()
-      assert(n >= 0, s"${q.name} failed")
-      assert(df.columns.nonEmpty, s"${q.name} has no columns")
-      withClue(s"${q.name}: ") { assert(df.columns.distinct.length === df.columns.length) }
-    }
+    // one cache scope per lane, opened on the thread that runs the lane;
+    // a failing lane is recorded by name and never stops the others
+    def check(q: QueryDef): Option[String] =
+      try IterCache.scope {
+        val df = q.fn(spark, sf0001)
+        df.count()
+        if (df.columns.isEmpty) Some(s"${q.name}: no columns")
+        else if (df.columns.distinct.length != df.columns.length)
+          Some(s"${q.name}: duplicate columns ${df.columns.mkString(",")}")
+        else None
+      } catch { case e: Throwable =>
+        Some(s"${q.name}: ${e.getClass.getSimpleName}: " +
+          Option(e.getMessage).getOrElse("").linesIterator.take(1).mkString)
+      }
     // batch lanes run CONCURRENTLY on the shared session (a SparkSession
     // schedules concurrent jobs safely; the only session-conf writes on
     // these paths are idempotent same-value sets) — this test is a mini
@@ -35,14 +42,17 @@ class RelationalSpec extends AnyFunSuite with SparkTestBase {
     val (streamQs, batchQs) = SparkEntry.registry.partition(
       _.name.startsWith("stream_"))
     val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
-    try {
-      val ec = scala.concurrent.ExecutionContext.fromExecutorService(pool)
-      val futures = batchQs.map(q =>
-        scala.concurrent.Future(check(q))(ec))
-      import scala.concurrent.duration._
-      futures.foreach(f => scala.concurrent.Await.result(f, 20.minutes))
-    } finally pool.shutdown()
-    streamQs.foreach(check)
+    val batchFailures =
+      try {
+        val ec = scala.concurrent.ExecutionContext.fromExecutorService(pool)
+        val futures = batchQs.map(q =>
+          scala.concurrent.Future(check(q))(ec))
+        import scala.concurrent.duration._
+        futures.flatMap(f => scala.concurrent.Await.result(f, 20.minutes))
+      } finally pool.shutdown()
+    val failures = batchFailures ++ streamQs.flatMap(check)
+    assert(failures.isEmpty,
+      s"${failures.size} lane(s) failed:\n${failures.mkString("\n")}")
   }
 
   test("q6 top-k per group: rn within group is 1..3 and prices non-increasing") {
